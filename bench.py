@@ -40,6 +40,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from liq_stream_spark import pins  # noqa: E402
 from liq_stream_spark.plans import REGISTRY  # noqa: E402
 from liq_stream_spark.session import get_spark  # noqa: E402
 
@@ -426,9 +427,10 @@ def main() -> None:
 
     def run_query(name: str) -> float:
         t0 = time.perf_counter()
-        REGISTRY[name].build(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
+        with pins.scope():
+            REGISTRY[name].build(spark, sf_dir).write.mode(
+                "overwrite"
+            ).format("noop").save()
         return time.perf_counter() - t0
 
     # BENCH_NOISE=N: measurement mode for the per-query noise band

@@ -32,16 +32,15 @@ not once per consumer. Two costs come with that choice. SIZE: a pinned
 SHINGLE table is ~16 bytes per (doc, distinct-gram) row — roughly one
 row per character of source text, so the block can match or EXCEED the
 input corpus size (only the (id, simhash) and pair tables are genuinely
-negligible). RELIABILITY: localCheckpoint blocks live unreplicated on
-executors and TRUNCATE lineage, so losing an executor mid-job fails the
-job instead of recomputing, and dynamic allocation can reap the hosting
-executor — on clusters with either risk, set a checkpoint dir and pass
-``reliable_checkpoint=True`` (every pinned function in this family takes
-it; the :func:`_pin` switch routes the same sites through HDFS-backed
-``df.checkpoint()``), trading one distributed write for restartability. On the fixed-executor clusters
-these jobs target (and local mode) the in-memory pin is the right
-default; the UDF-runs-once invariant, not the storage medium, is what
-the plans rely on (tests/test_plans.py).
+negligible). RELIABILITY: :func:`liq_stream_spark.pins.pin` decides the
+storage. Without a checkpoint dir the pin is an unreplicated
+``localCheckpoint``: losing an executor mid-job fails the job instead of
+recomputing, and dynamic allocation can reap the hosting executor. On
+clusters with either risk, set a checkpoint dir
+(``sparkContext.setCheckpointDir``); every pin in the package then writes
+a reliable ``checkpoint()`` there, one distributed write (and one more
+evaluation of the frame) for restartability. The plans rely on the
+UDF-runs-once invariant of the local pin (tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -57,24 +56,9 @@ from liq_stream_spark.operators.text import (
     np,
     pd,
 )
+from liq_stream_spark.pins import pin
 
 MERSENNE31 = 2147483647  # 2^31 - 1
-
-
-def _pin(df: DataFrame, eager: bool, reliable: bool) -> DataFrame:
-    """The materialization pin behind the module docstring's caveat,
-    as a SWITCH (VERDICT r8 item 6): ``reliable=False`` (default) is
-    ``localCheckpoint`` — in-memory, unreplicated, right for fixed
-    executors and local mode; ``reliable=True`` is HDFS-backed
-    ``df.checkpoint()`` for clusters with dynamic allocation or
-    executor-loss risk, trading one distributed write per pin for
-    restartability. Requires ``spark.sparkContext.setCheckpointDir``
-    (Spark raises a clear error if unset). Either way the pinned frame
-    computes once per plan — the UDF-runs-once invariant the plans rely
-    on is storage-medium-independent."""
-    if reliable:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
 
 
 # fixed, deterministic permutation constants (k = 16); generated once from
@@ -669,7 +653,6 @@ def ngram_jaccard_pairs(
     ngram: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs (>= threshold).
 
@@ -695,17 +678,14 @@ def ngram_jaccard_pairs(
     itself also runs once). The pinned block is NOT small — ~16 bytes
     per (doc, distinct-gram) row ≈ one row per source character, so it
     can exceed the corpus text size; see the module docstring for the
-    size/executor-loss tradeoff; ``reliable_checkpoint=True`` switches
-    the pins to HDFS-backed ``df.checkpoint()`` (see :func:`_pin`)."""
-    shingles = _pin(
+    size/executor-loss tradeoff."""
+    shingles = pin(
         df.select(
             F.col(id_col),
             F.explode(
                 F.array_distinct(char_ngram_hashes_fast(text_col, ngram))
             ).alias("sh"),
-        ),
-        eager=False,
-        reliable=reliable_checkpoint,
+        )
     )
     if max_doc_freq is not None:
         keep = (
@@ -718,11 +698,7 @@ def ngram_jaccard_pairs(
         # (sizes, both join sides) would otherwise each recompute the
         # explode + doc-frequency + semi-join subtree — one checkpoint
         # write beats three shingle-table shuffles
-        shingles = _pin(
-            shingles.join(keep, "sh", "left_semi"),
-            eager=False,
-            reliable=reliable_checkpoint,
-        )
+        shingles = pin(shingles.join(keep, "sh", "left_semi"))
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = shingles.select(F.col(id_col).alias("id_a"), "sh")
     b = shingles.select(F.col(id_col).alias("id_b"), "sh")
@@ -820,7 +796,6 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance.
 
@@ -849,11 +824,7 @@ def simhash_near_pairs(
     logical computation (measured 5.5 -> 1.2 s warm at sf0.1).
     (id, simhash) is 16 bytes/doc, negligible executor storage beside
     the text corpus it summarizes at any scale."""
-    sig = _pin(
-        simhash_table(df, id_col, text_col),
-        eager=False,
-        reliable=reliable_checkpoint,
-    )
+    sig = pin(simhash_table(df, id_col, text_col))
     blocks = sig.select(
         id_col,
         "simhash",
@@ -899,7 +870,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iters: int = 25,
     shuffle_partitions: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components over a candidate-pair edge list: the endgame of
     every fuzzy-dedup pipeline. Pairs only say "these two are near-dups";
@@ -937,10 +907,8 @@ def connected_components(
     # candidate chain (d14's sig-scan -> band shuffle -> estimate join
     # ran twice end-to-end inside the edge checkpoint; r7 profile).
     # The pair block is two longs per row, negligible beside the chain.
-    directed = _pin(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-        eager=False,
-        reliable=reliable_checkpoint,
+    directed = pin(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     )
     edges = directed.union(
         directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -963,22 +931,16 @@ def connected_components(
     # regime the loop re-pins this frame sorted+persisted after round 1
     # (see _cc_loop) — deferred there because the regime test needs the
     # exact node count, which round 1 produces for free.
-    edges = _pin(
-        edges.repartition(shuffle_partitions, "dst"),
-        eager=False,
-        reliable=reliable_checkpoint,
-    )
+    edges = pin(edges.repartition(shuffle_partitions, "dst"))
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        labels = _cc_loop(edges, max_iters, reliable_checkpoint)
+        labels = _cc_loop(edges, max_iters)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", session_sp)
     return labels
 
 
-def _cc_loop(
-    edges: DataFrame, max_iters: int, reliable_checkpoint: bool = False
-) -> DataFrame:
+def _cc_loop(edges: DataFrame, max_iters: int) -> DataFrame:
     # Round 1 against IDENTITY labels needs no label join at all:
     # min(comp over neighbors) = min(dst), and the node set = the src
     # side of the symmetric edge list — one groupBy replaces the
@@ -1085,9 +1047,7 @@ def _cc_loop(
                 "__old",
             )
         )
-        compressed = _pin(
-            compressed, eager=False, reliable=reliable_checkpoint
-        )
+        compressed = pin(compressed)
         # one action per round (the Pregel pattern): a single 1-row
         # aggregate returns the changed count AND (round 1 only) the
         # exact node count the broadcast gate needs — no extra job.
@@ -1098,10 +1058,9 @@ def _cc_loop(
         if n_nodes is None:
             n_nodes = row["__n"]
             if n_nodes > bcast_rows and max_iters > 1:
-                edges = (
-                    edges.repartition(F.col("dst"))
-                    .sortWithinPartitions("dst")
-                    .persist()
+                edges = pin(
+                    edges.repartition(F.col("dst")).sortWithinPartitions("dst"),
+                    keep_lineage=True,
                 )
         changed = row["__chg"]
         labels = compressed.select("node", "comp")
@@ -1123,7 +1082,6 @@ def dedup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Cluster view of a near-dup pair list: per node its cluster id (min
     reachable node), the cluster size, and whether this node is the
@@ -1138,9 +1096,7 @@ def dedup_clusters(
     clusters cleanly. Candidate components (d06's registered form) are
     for bucket diagnostics; keep-one-per-cluster decisions belong on
     the verified chain."""
-    cc = connected_components(
-        pairs, id_a, id_b, reliable_checkpoint=reliable_checkpoint
-    )
+    cc = connected_components(pairs, id_a, id_b)
     sizes = cc.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         cc.join(sizes, "comp")
@@ -1158,7 +1114,6 @@ def dedup_survivors(
     pairs: DataFrame,
     id_col: str = "doc_id",
     broadcast_clusters: bool = True,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """The keep-one-per-cluster decision applied to the corpus: every doc
     that is either outside all near-dup clusters (cluster_size 1) or the
@@ -1173,11 +1128,7 @@ def dedup_survivors(
     # the cluster frame is tiny (only docs appearing in pairs) but its
     # lineage is the full Pregel iteration — materialize once for the
     # two consumers (drop set + survivor sizes)
-    clusters = _pin(
-        dedup_clusters(pairs, reliable_checkpoint=reliable_checkpoint),
-        eager=False,
-        reliable=reliable_checkpoint,
-    )
+    clusters = pin(dedup_clusters(pairs))
     drop = clusters.filter(~F.col("is_canonical")).select(
         F.col("doc_id").alias(id_col)
     )
@@ -1406,7 +1357,6 @@ def ngram_jaccard_pairs_prefix(
     text_col: str = "text",
     ngram: int = 3,
     threshold: float = 0.5,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via PREFIX FILTERING (the SSJoin/PPJoin
     family — Chaudhuri et al., ICDE 2006; Bayardo et al., WWW 2007):
@@ -1443,15 +1393,13 @@ def ngram_jaccard_pairs_prefix(
     prefix head. The verify join over the surviving candidates is this
     corpus's exact-verify floor; the approximate d14 chain is the
     fast path."""
-    shingles = _pin(
+    shingles = pin(
         df.select(
             F.col(id_col),
             F.explode(
                 F.array_distinct(char_ngram_hashes_fast(text_col, ngram))
             ).alias("sh"),
-        ),
-        eager=False,
-        reliable=reliable_checkpoint,
+        )
     )
     # materialized once (same convention as ngram_jaccard_pairs' capped
     # path): the Arrow-hashed corpus explode feeds dfreq, the ranked
@@ -1558,7 +1506,6 @@ def ngram_containment_pairs(
     ngram: int = 3,
     threshold: float = 0.9,
     max_doc_freq: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT pairs: C(A in B) = |A ∩ B| / |A| >=
     ``threshold`` — the ASYMMETRIC companion to Jaccard (Broder's
@@ -1581,15 +1528,13 @@ def ngram_containment_pairs(
     executor-loss caveat as :func:`ngram_jaccard_pairs` (r7 audit: four
     UDF evaluations in the uncapped plan without it; the pinned block
     can exceed the corpus text size — module docstring)."""
-    shingles = _pin(
+    shingles = pin(
         df.select(
             F.col(id_col),
             F.explode(
                 F.array_distinct(char_ngram_hashes_fast(text_col, ngram))
             ).alias("sh"),
-        ),
-        eager=False,
-        reliable=reliable_checkpoint,
+        )
     )
     if max_doc_freq is not None:
         keep = (
@@ -1598,11 +1543,7 @@ def ngram_containment_pairs(
             .filter(F.col("df") <= max_doc_freq)
             .select("sh")
         )
-        shingles = _pin(
-            shingles.join(keep, "sh", "left_semi"),
-            eager=False,
-            reliable=reliable_checkpoint,
-        )
+        shingles = pin(shingles.join(keep, "sh", "left_semi"))
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     # aggregate each unordered pair ONCE (a < b, the d04 convention —
     # halves the dominant pair shuffle), then emit the two directed

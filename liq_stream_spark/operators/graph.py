@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from liq_stream_spark.functions.core import qfloor_long
+from liq_stream_spark.pins import pin
 
 # decimal places every rank/contribution is rounded to each iteration
 SCALE = 12
@@ -77,11 +78,7 @@ def pagerank(
     # reuse — without the pin each consumer re-runs the node source +
     # distinct exchange. Vertex-sized, lazily materialized by the
     # count() below (r13).
-    nd = (
-        nodes.select(F.col(id_col).alias("node_id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nd = pin(nodes.select(F.col(id_col).alias("node_id")).distinct())
     n = nd.count()
     if n == 0:
         return nd.select(
@@ -131,10 +128,9 @@ def pagerank(
         .join(nd.select(F.col("node_id").alias("src")), "src", "left_semi")
         .join(nd.select(F.col("node_id").alias("dst")), "dst", "left_semi")
     )
-    if small:
-        e = e.localCheckpoint(eager=False)
-    else:
-        e = e.repartition(F.col("src")).sortWithinPartitions("src").persist()
+    if not small:
+        e = e.repartition(F.col("src")).sortWithinPartitions("src")
+    e = pin(e, keep_lineage=not small)
     # deg is joined in EVERY round plus the final projection — without
     # the pin each consumer re-aggregates the edge pin (an edge-sized
     # pass per iteration at 100 TB). Vertex-sized (r13). In the large
@@ -142,7 +138,7 @@ def pagerank(
     # hash(src) partitioning — inherited exchange-free from the edge
     # pin — survives for the per-round and final joins on src.
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    deg = deg.localCheckpoint(eager=False) if small else deg.persist()
+    deg = pin(deg, keep_lineage=not small)
 
     ranks = nd.withColumn("r", r0)
     for _ in range(n_iters):
@@ -161,9 +157,8 @@ def pagerank(
             .agg(F.sum("c").alias("mass"))
         )
         base = ranks.select("node_id")
-        ranks = (
-            base.join(contrib, base.node_id == contrib.dst, "left")
-            .select(
+        ranks = pin(
+            base.join(contrib, base.node_id == contrib.dst, "left").select(
                 "node_id",
                 F.floor(
                     teleport
@@ -171,7 +166,6 @@ def pagerank(
                     + F.lit(0.5)
                 ).alias("r"),
             )
-            .localCheckpoint(eager=False)
         )
     return ranks.join(deg, ranks.node_id == deg.src, "left").select(
         "node_id",

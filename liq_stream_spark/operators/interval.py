@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from liq_stream_spark.pins import pin
+
 
 def interval_join(
     rows: DataFrame,
@@ -70,9 +72,7 @@ def interval_join(
         # the SAME id assignment (otherwise a nondeterministically
         # ordered input, e.g. round-robin repartition, gets different
         # ids per branch: unmatched rows lost, matched rows duplicated)
-        pts = pts.withColumn(
-            "__rid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        pts = pin(pts.withColumn("__rid", F.monotonically_increasing_id()))
 
     cond = [pts["__bucket"] == ivals["__bucket"]] + [
         pts[k] == ivals[k] for k in keys

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from liq_stream_spark.pins import pin
+
 _DEC = "decimal(25,6)"
 
 
@@ -135,11 +137,10 @@ def sessionize_bucketed(
     # are orders of magnitude smaller than events, both union branches
     # read the same InMemoryRelation (the shared stage runs once), and an
     # executor loss recomputes from lineage instead of failing the query.
-    # No explicit unpersist: the returned frame is lazy, and Spark's
-    # ContextCleaner drops the cached blocks once the frame (and the
-    # plans referencing it) are garbage-collected driver-side, so
-    # repeated builds in one long session don't pin storage forever.
-    local = _sessions_agg(numbered.groupBy(*keys, "__b", "__sid")).persist()
+    local = pin(
+        _sessions_agg(numbered.groupBy(*keys, "__b", "__sid")),
+        keep_lineage=True,
+    )
 
     # a session can cross a bucket edge only if it starts within `gap` of
     # its bucket's lower edge or ends within `gap` of the upper edge;

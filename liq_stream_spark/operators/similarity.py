@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from liq_stream_spark.pins import pin
+
 
 def _dot(a: str, b: str) -> Column:
     return F.expr(
@@ -536,14 +538,9 @@ def semantic_dedup(
     # consumers (both pair sides + the final output) and DataFrame
     # lineage has no common-subexpression reuse — without the checkpoint
     # the corpus would be assigned (scanned + shuffled) three times.
-    # eager=False: the checkpoint itself adds no construction-time job
-    # (the k-means build above is inherently eager — it collects tiny
-    # centroid frames); the block is computed once, on first action, and
-    # reused. localCheckpoint blocks are unreplicated — executor loss
-    # recomputes from scratch (see ARCHITECTURE.md "Materialization").
-    cells = _assign_cells(corpus, centroids, id_col, vec_col).localCheckpoint(
-        eager=False
-    )
+    # The pin itself starts no job (the k-means build above does: it
+    # collects tiny centroid frames); see ARCHITECTURE.md "Materialization".
+    cells = pin(_assign_cells(corpus, centroids, id_col, vec_col))
     a = cells.select(
         "cell", F.col("vid").alias("id_a"), F.col("vec").alias("va")
     )

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from liq_stream_spark.functions.core import qfloor_long, qround
+from liq_stream_spark.pins import pin
 
 try:  # Arrow fast path for char_ngram_hashes_fast; expression fallback
     import numpy as np
@@ -528,13 +529,7 @@ def tfidf_top_terms(
     # materialize the per-doc term counts once: both the document
     # frequency and the scoring join consume tf, and recomputing it
     # means two explode+groupBy passes over the corpus
-    tf = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        # lazy: computed once on first action, reused by both consumers;
-        # eager=False keeps DataFrame construction job-free (plan audits)
-        .localCheckpoint(eager=False)
-    )
+    tf = pin(toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -1009,10 +1004,8 @@ def bigram_lm_scores(
     tb = _bigrams(train)
     if train is docs:
         # scoring occurrences double as the model's per-doc partials
-        occ = (
-            tb.groupBy(id_col, "w1", "w2")
-            .agg(F.count(F.lit(1)).alias("k"))
-            .localCheckpoint(eager=False)
+        occ = pin(
+            tb.groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("k"))
         )
         model = occ.groupBy("w1", "w2").agg(F.sum("k").alias("cb"))
     else:
@@ -1020,7 +1013,7 @@ def bigram_lm_scores(
         occ = _bigrams(docs).groupBy(id_col, "w1", "w2").agg(
             F.count(F.lit(1)).alias("k")
         )
-    model = model.localCheckpoint(eager=False)
+    model = pin(model)
     starts = model.groupBy("w1").agg(F.sum("cb").alias("cu"))
     vocab = (
         train.select(F.explode(tokens(text_col)).alias("w"))
@@ -1269,9 +1262,7 @@ def winnow_clone_pairs(
     operators/dedup.py, which can exceed it — see that module's
     materialization caveat for the localCheckpoint executor-loss
     tradeoff, which applies here identically)."""
-    fps = winnow_fingerprints(
-        docs, window=window, ngram=ngram
-    ).localCheckpoint(eager=False)
+    fps = pin(winnow_fingerprints(docs, window=window, ngram=ngram))
     if max_doc_freq is not None:
         keep = (
             fps.groupBy("fp")
@@ -1279,7 +1270,7 @@ def winnow_clone_pairs(
             .filter(F.col("df") <= max_doc_freq)
             .select("fp")
         )
-        fps = fps.join(keep, "fp", "left_semi").localCheckpoint(eager=False)
+        fps = pin(fps.join(keep, "fp", "left_semi"))
     sizes = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fp"))
     a = fps.select(F.col(id_col).alias("id_a"), "fp")
     b = fps.select(F.col(id_col).alias("id_b"), "fp")

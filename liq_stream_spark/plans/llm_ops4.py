@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from liq_stream_spark.pins import pin
 from liq_stream_spark.plans import register
 from liq_stream_spark.plans.llm_ops import DUCK_TOKENS
 from liq_stream_spark.plans.tables import load
@@ -213,9 +214,7 @@ def d12_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the estimate join) — without materialization the pandas-UDF
     # signing pass runs three times (the pagerank/t13 checkpoint
     # convention; measured ~20% off the whole chain at sf0.1)
-    sigs = D.minhash_sig_arrays(
-        load(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=False)
+    sigs = pin(D.minhash_sig_arrays(load(spark, sf_dir, "documents")))
     pairs = D.lsh_candidate_pairs_banded(sigs, max_bucket=None)
     return D.minhash_jaccard_estimates(sigs, pairs)
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from liq_stream_spark.operators import graph as G
+from liq_stream_spark.pins import pin
 from liq_stream_spark.plans import register
 from liq_stream_spark.plans.tables import dsum, load
 
@@ -270,7 +271,7 @@ def g01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = D.minhash_sig_arrays(docs)
     # both unionAll branches read e0 — materialize the star-edge chain
     # (incl. the pandas-UDF signing) once, not per branch
-    e0 = D.lsh_star_edges(sigs).localCheckpoint(eager=False)
+    e0 = pin(D.lsh_star_edges(sigs))
     edges = e0.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionAll(e0.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -616,9 +617,7 @@ def g02_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides — materialize once so the Arrow signing pass behind it runs
     # once (g01/p13's e0 convention; r7 audit measured three full
     # evaluations without it)
-    return triangle_counts(
-        D.lsh_star_edges(sigs).localCheckpoint(eager=False)
-    )
+    return triangle_counts(pin(D.lsh_star_edges(sigs)))
 
 
 # -- p12: corpus mixture report --------------------------------------------

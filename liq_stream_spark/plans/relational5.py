@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from liq_stream_spark.pins import pin
 from liq_stream_spark.plans import register
 from liq_stream_spark.plans.tables import dsum, load
 
@@ -84,19 +85,17 @@ def q38_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without materialization the nesting recompiles earlier stages per
     # consumer (events would be scanned 1+2+3 times). The checkpointed
     # frames are per-user aggregates — tiny relative to the event log.
-    v = (
+    v = pin(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_view"))
-        .localCheckpoint(eager=False)
     )
-    c = (
+    c = pin(
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("first_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_click"))
-        .localCheckpoint(eager=False)
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")

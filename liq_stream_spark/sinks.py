@@ -34,6 +34,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from liq_stream_spark import pins
+
 RED = "\x1b[31m"
 GREEN = "\x1b[32m"
 DIM = "\x1b[2m"
@@ -617,8 +619,9 @@ class FanOutConfig:
 
 
 def fan_out(config: FanOutConfig):
-    """foreachBatch body (K1): persist once, write to every enabled sink.
-    Without persist, each sink would recompute the batch from source."""
+    """foreachBatch body (K1): pin once, write to every enabled sink.
+    Without the pin, each sink would recompute the batch from source; it
+    is released when the micro-batch's writes are done."""
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
         enabled = [
@@ -626,9 +629,9 @@ def fan_out(config: FanOutConfig):
             for s in (config.parquet_path, config.csv_path, config.jdbc_url)
             if s
         ]
-        if len(enabled) + int(config.console) > 1:
-            batch_df.persist()
-        try:
+        with pins.scope():
+            if len(enabled) + int(config.console) > 1:
+                pins.pin(batch_df, keep_lineage=True)
             if config.console:
                 print_console(batch_df, color=config.console_color)
             if config.parquet_path:
@@ -661,7 +664,5 @@ def fan_out(config: FanOutConfig):
                         batch_size=config.jdbc_batch_size,
                         properties=config.jdbc_properties,
                     )
-        finally:
-            batch_df.unpersist()
 
     return _write

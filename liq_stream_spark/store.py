@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from liq_stream_spark.pins import pin
 from liq_stream_spark.sinks import with_date
 
 
@@ -1402,10 +1403,10 @@ def append_to_ivf_index(
             new_vectors.select(id_col), path, "append", batch=True
         )
         # one assignment pass, reused by both appends (inverted + codes)
-        assigned = (
-            _assign_cells(new_vectors, centroids, id_col, vec_col)
-            .select(F.col("vid").alias("neighbor_id"), "vec", "cell")
-            .localCheckpoint(eager=False)
+        assigned = pin(
+            _assign_cells(new_vectors, centroids, id_col, vec_col).select(
+                F.col("vid").alias("neighbor_id"), "vec", "cell"
+            )
         )
         (
             assigned.write.mode("append")

@@ -324,6 +324,7 @@ def drive(names: list[str] | None = None, sf_dir: str = "/root/testdata/sf0.01")
     driven query matches. Queries without an oracle run rows-only."""
     import duckdb
 
+    from liq_stream_spark import pins
     from liq_stream_spark.compare import frame_repr
     from liq_stream_spark.plans import REGISTRY
     from liq_stream_spark.schema import TESTDATA_TABLES
@@ -355,9 +356,10 @@ def drive(names: list[str] | None = None, sf_dir: str = "/root/testdata/sf0.01")
     for name in todo:
         q = REGISTRY[name]
         try:
-            sdf = q.build(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            with pins.scope():
+                sdf = q.build(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
             if q.oracle is None:
                 print(f"{name}: rows-only ran, {len(srows)} rows")
                 continue
@@ -407,6 +409,7 @@ def profile(
     import json
     import urllib.request
 
+    from liq_stream_spark import pins
     from liq_stream_spark.plans import REGISTRY
     from liq_stream_spark.session import get_spark
 
@@ -449,9 +452,10 @@ def profile(
         import time as _time
 
         t0 = _time.time()
-        REGISTRY[name].build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        with pins.scope():
+            REGISTRY[name].build(spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
         wall = _time.time() - t0
         stages = [
             s
@@ -521,6 +525,7 @@ def parity(
     import os
     import time
 
+    from liq_stream_spark import pins
     from liq_stream_spark.compare import frame_repr
     from liq_stream_spark.plans import REGISTRY
     from liq_stream_spark.session import get_spark
@@ -543,10 +548,12 @@ def parity(
             t0 = time.perf_counter()
             reprs = []
             for _ in range(2):
-                sdf = q.build(spark, sf_dir)
-                reprs.append(
-                    frame_repr(sdf.columns, [tuple(r) for r in sdf.collect()])
-                )
+                # one scope per run: the second run must not read the
+                # first run's cached blocks
+                with pins.scope():
+                    sdf = q.build(spark, sf_dir)
+                    rows = [tuple(r) for r in sdf.collect()]
+                reprs.append(frame_repr(sdf.columns, rows))
             (n1, b1), (n2, b2) = reprs
             good = n1 == n2 and b1 == b2
             note = ""

@@ -58,38 +58,48 @@ def test_ngram_jaccard_exact_values(docs):
     assert (0, 3) not in out
 
 
-def test_reliable_checkpoint_knob(spark, docs, tmp_path):
-    """VERDICT r8 item 6: the documented localCheckpoint/df.checkpoint
-    tradeoff is a SWITCH. With a checkpoint dir set,
-    reliable_checkpoint=True routes every pin through HDFS-backed
-    df.checkpoint() — results identical to the default, and the
-    checkpoint dir actually receives the pinned blocks (proof the
-    reliable arm ran, not the in-memory one)."""
+def test_checkpoint_dir_makes_pins_reliable(spark, docs, tmp_path):
+    """Whether a pin is reliable follows the SparkContext's checkpoint
+    dir (liq_stream_spark.pins). With a dir set, every pin is a
+    checkpoint() written under it, with results identical to the
+    localCheckpoint arm's; with no dir set, nothing is written."""
     import os
 
+    sc = spark.sparkContext
     ckpt = str(tmp_path / "ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt)
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    pairs_default = D.ngram_jaccard_pairs(docs, threshold=0.5)
-    pairs_reliable = D.ngram_jaccard_pairs(
-        docs, threshold=0.5, reliable_checkpoint=True
-    )
-    assert rows(pairs_default) == rows(pairs_reliable)
-    assert rows(D.simhash_near_pairs(docs, max_hamming=8)) == rows(
-        D.simhash_near_pairs(docs, max_hamming=8, reliable_checkpoint=True)
-    )
-    assert rows(D.dedup_survivors(docs, pairs_default)) == rows(
-        D.dedup_survivors(docs, pairs_reliable, reliable_checkpoint=True)
-    )
-    written = [
-        os.path.join(r, f)
-        for r, _d, files in os.walk(ckpt)
-        for f in files
-    ]
-    assert written, "reliable pins must write blocks under the checkpoint dir"
+    def run():
+        pairs = D.ngram_jaccard_pairs(docs, threshold=0.5)
+        return (
+            rows(pairs),
+            rows(D.simhash_near_pairs(docs, max_hamming=8)),
+            rows(D.dedup_survivors(docs, pairs)),
+        )
+
+    def written():
+        return sorted(
+            os.path.join(r, f) for r, _d, files in os.walk(ckpt) for f in files
+        )
+
+    # no public API unsets the dir; the tests after this one must pin
+    # with the dir the session had before (none, in this suite)
+    set_dir = getattr(sc._jsc.sc(), "checkpointDir_$eq")
+    prev = sc._jvm.scala.Option.apply(sc.getCheckpointDir())
+    try:
+        set_dir(sc._jvm.scala.Option.apply(None))
+        local = run()
+        sc.setCheckpointDir(ckpt)
+        assert run() == local
+        reliable_files = written()
+        assert reliable_files, "reliable pins must write under the checkpoint dir"
+        set_dir(sc._jvm.scala.Option.apply(None))
+        assert run() == local
+        assert written() == reliable_files, "no checkpoint dir, no writes"
+    finally:
+        set_dir(prev)
 
 
 def test_simhash_hamming_close_for_near_dups(docs):

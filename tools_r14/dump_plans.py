@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Capture per-round plans for the r14 CC/PageRank changes.
 
-Spies on dedup._pin / DataFrame.localCheckpoint to capture each round's
+Spies on dedup's pin / DataFrame.localCheckpoint to capture each round's
 pre-pin frame, then dumps .explain("formatted") for the requested round
 under both broadcast regimes (fixture = gate open; scale emulation =
 autoBroadcastJoinThreshold -1 = gate shut).
@@ -40,17 +40,17 @@ def dump_cc(spark, sf_dir: str, out_dir: str) -> None:
         if thresh is not None:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
         captured = []
-        orig_pin = D._pin
+        orig_pin = D.pin
 
-        def spy(df, eager, reliable, _c=captured, _o=orig_pin):
+        def spy(df, keep_lineage=False, _c=captured, _o=orig_pin):
             _c.append(df)
-            return _o(df, eager, reliable)
+            return _o(df, keep_lineage)
 
-        D._pin = spy
+        D.pin = spy
         try:
             D.connected_components(pairs).count()
         finally:
-            D._pin = orig_pin
+            D.pin = orig_pin
         # captured: [directed, edges(prepin), round1, round2, ...] — the
         # generic round is the 4th capture (directed, edge pin, r1, r2)
         names = {}
