@@ -38,9 +38,9 @@ storage. Without a checkpoint dir the pin is an unreplicated
 recomputing, and dynamic allocation can reap the hosting executor. On
 clusters with either risk, set a checkpoint dir
 (``sparkContext.setCheckpointDir``); every pin in the package then writes
-a reliable ``checkpoint()`` there, one distributed write (and one more
-evaluation of the frame) for restartability. The plans rely on the
-UDF-runs-once invariant of the local pin (tests/test_plans.py).
+a reliable ``checkpoint()`` there, one distributed write for
+restartability. Either kind computes its frame once, which the plans'
+UDF-runs-once invariant relies on (tests/test_plans.py).
 """
 
 from __future__ import annotations

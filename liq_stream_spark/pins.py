@@ -7,7 +7,9 @@ relation keeps its lineage for executor-loss recovery, and its scan keeps
 the plan's partitioning and sort. Otherwise the pin is a lazy checkpoint
 that truncates lineage: the reliable ``checkpoint()`` when the
 SparkContext has a checkpoint dir set, ``localCheckpoint()`` when not.
-No pin starts a job.
+No pin starts a job, and every kind computes its frame once: the reliable
+checkpoint caches its RDD like the local one, so its write reads the
+blocks the first action stored.
 
 Pins made inside :func:`scope` are released when it exits: a persisted
 frame is uncached (leaving no CacheManager entry for a later query over a
@@ -28,19 +30,27 @@ _scopes = threading.local()
 
 def pin(df: DataFrame, keep_lineage: bool = False) -> DataFrame:
     """Materialize ``df`` once for all its consumers (module docstring)."""
+    sc = df.sparkSession.sparkContext
     if keep_lineage:
         pinned = df.persist()
-    elif df.sparkSession.sparkContext.getCheckpointDir() is None:
-        pinned = df.localCheckpoint(eager=False)
+        release = pinned.unpersist
     else:
-        pinned = df.checkpoint(eager=False)
+        reliable = sc.getCheckpointDir() is not None
+        if reliable:
+            pinned = df.checkpoint(eager=False)
+        else:
+            pinned = df.localCheckpoint(eager=False)
+        rdd = pinned._jdf.queryExecution().analyzed().rdd()
+        if reliable:
+            # checkpoint() writes in a job of its own after the first
+            # action; cached blocks (localCheckpoint's storage level) let
+            # that write read the frame instead of computing it again
+            level = sc._jvm.org.apache.spark.storage.StorageLevel
+            rdd.persist(level.MEMORY_AND_DISK())
+        release = lambda: rdd.unpersist(False)
     stack = getattr(_scopes, "stack", None)
     if stack:
-        if keep_lineage:
-            stack[-1].append(pinned.unpersist)
-        else:
-            rdd = pinned._jdf.queryExecution().analyzed().rdd()
-            stack[-1].append(lambda: rdd.unpersist(False))
+        stack[-1].append(release)
     return pinned
 
 

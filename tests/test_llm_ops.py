@@ -62,11 +62,29 @@ def test_checkpoint_dir_makes_pins_reliable(spark, docs, tmp_path):
     """Whether a pin is reliable follows the SparkContext's checkpoint
     dir (liq_stream_spark.pins). With a dir set, every pin is a
     checkpoint() written under it, with results identical to the
-    localCheckpoint arm's; with no dir set, nothing is written."""
+    localCheckpoint arm's; with no dir set, nothing is written. Either
+    way a pinned frame read by two consumers computes once: a Python UDF
+    behind the pin runs once per row, also for the checkpoint's write."""
     import os
+
+    from liq_stream_spark import pins
 
     sc = spark.sparkContext
     ckpt = str(tmp_path / "ckpt")
+    calls = sc.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        calls.add(1)
+        return x
+
+    def evaluations():
+        calls.value = 0
+        with pins.scope():
+            p = pins.pin(spark.range(500).select(counted("id").alias("y")))
+            assert p.filter("y % 2 = 0").count() == 250
+            assert p.filter("y % 2 = 1").count() == 250
+        return calls.value
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
@@ -87,19 +105,24 @@ def test_checkpoint_dir_makes_pins_reliable(spark, docs, tmp_path):
     # no public API unsets the dir; the tests after this one must pin
     # with the dir the session had before (none, in this suite)
     set_dir = getattr(sc._jsc.sc(), "checkpointDir_$eq")
-    prev = sc._jvm.scala.Option.apply(sc.getCheckpointDir())
+    prev_dir = sc.getCheckpointDir()
     try:
         set_dir(sc._jvm.scala.Option.apply(None))
         local = run()
+        assert evaluations() == 500
         sc.setCheckpointDir(ckpt)
         assert run() == local
         reliable_files = written()
         assert reliable_files, "reliable pins must write under the checkpoint dir"
+        assert evaluations() == 500, "the checkpoint write recomputed the frame"
+        reliable_files = written()
         set_dir(sc._jvm.scala.Option.apply(None))
         assert run() == local
         assert written() == reliable_files, "no checkpoint dir, no writes"
     finally:
-        set_dir(prev)
+        set_dir(sc._jvm.scala.Option.apply(prev_dir))
+    # a failed restore would turn every later test onto the reliable arm
+    assert sc.getCheckpointDir() == prev_dir
 
 
 def test_simhash_hamming_close_for_near_dups(docs):
