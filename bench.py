@@ -29,12 +29,18 @@ of it cost more wall-clock than the entire rest of the bench; set
 BENCH_D16=1 to include it (min-of-2). d14 — the fast path users actually
 run — is benched in its place. The remaining extras stay single-run
 informative figures.
+
+Both output lines carry the capture conditions and a machine-first
+``unreliable`` verdict (:func:`_reliable`): only a warm run at sf0.1 on
+a quiet host whose sentinel and per-query readings all sit inside
+their quiet references is stamped reliable.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -67,32 +73,20 @@ HEADLINE = [
 ]
 
 
-def _calib_spin_ms() -> float:
-    """Fixed single-thread integer loop (min-of-3) — a Spark-independent
-    probe of effective CPU speed comparable across artifacts on the
-    same host."""
-
-    def spin() -> float:
-        t0 = time.perf_counter()
-        x = 0
-        for i in range(2_000_000):
-            x += i * i
-        return time.perf_counter() - t0
-
-    return round(min(spin() for _ in range(3)) * 1000, 1)
+def _parse_sf(sf_dir: str) -> float | None:
+    """Scale factor from an ``sfN`` directory name (``/data/sf0.1`` ->
+    0.1); None for any other name (``scale10``, ``foo-sf0.1``), which
+    the artifact records as ``"sf": null`` and treats as off-reference."""
+    m = re.fullmatch(r"sf(\d*\.?\d+)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
 
 
 def _host_conditions() -> dict:
-    """Stamp the machine epoch into the artifact (VERDICT r8 item 5):
-    BENCH_NOISE.md measured that host-epoch drift (load, thermal/clock
-    state) moves whole totals 35-60% on identical code, so a bench JSON
-    without its capture conditions cannot be read across rounds without
-    verify-notes archaeology. Captured BEFORE the Spark session starts
-    (the bench itself loads all cores). ``calib_spin_ms`` is a fixed
-    single-thread integer loop (min-of-3) — a Spark-independent probe
-    of effective CPU speed comparable across artifacts on the same
-    host; ``epoch_check`` applies the BENCH_NOISE quiet-machine rule
-    directly so the verdict rides with the number it qualifies."""
+    """Stamp the machine epoch into the artifact: BENCH_NOISE.md
+    measured that host-epoch drift moves whole totals 35-60% on
+    identical code, so a bench JSON without its capture conditions
+    cannot be read across rounds. Captured BEFORE the Spark session
+    starts (the bench itself loads all cores)."""
     from datetime import datetime, timezone
 
     try:
@@ -104,7 +98,6 @@ def _host_conditions() -> dict:
             uptime = float(f.read().split()[0])
     except OSError:  # non-Linux
         uptime = None
-    quiet = load1 is not None and load1 < 0.5 and load5 < 0.5
     return {
         "ts_utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
         "load1": None if load1 is None else round(load1, 2),
@@ -112,99 +105,42 @@ def _host_conditions() -> dict:
         "load15": None if load15 is None else round(load15, 2),
         "uptime_sec": None if uptime is None else round(uptime),
         "cpus": os.cpu_count(),
-        "calib_spin_ms": _calib_spin_ms(),
-        "epoch_check": (
-            "quiet (load1 & load5 < 0.5; BENCH_NOISE.md band applies)"
-            if quiet
-            else "load averages unavailable on this platform — judge "
-            "the epoch by the calib_spin_ms probe"
-            if load1 is None
-            else (
-                f"LOADED (load1 = {load1:.2f}, load5 = {load5:.2f}; "
-                "quiet needs both < 0.5) — numbers unreliable per "
-                "BENCH_NOISE.md; re-run on a quiet machine before "
-                "recording regressions"
-            )
-        ),
     }
 
 
-# measured quiet-epoch calibration spin on this host (BENCH_NOISE.md /
-# verify notes: ~106-110 ms across r7-r11 quiet closes); a capture whose
-# calib drifts past ~8% of this is a degraded epoch even when load1
-# already reads quiet — the r10 close observed exactly that (load1 0.21
-# "quiet" right after a 25-min suite, absurd per-query outliers, calib
-# 125-139 ms), and the r11 artifact of record shipped at calib 120.3 ms
-# (1.114x) INSIDE the old 1.15x band while reading 22.15 s against a
-# genuinely-quiet 13.26 s (VERDICT r11 item 1: every genuinely quiet
-# close reads 106-110 ms — the band must exclude 120). Override per
-# host with BENCH_CALIB_QUIET_MS.
-_QUIET_CALIB_REF_MS = 108.0
-_QUIET_CALIB_BAND = 1.08
-# quiet-epoch warm-min of the sentinel query (q01, min-of-3 after
-# warm-up) on this host, expressed AT THE CANONICAL CLOCK (calib spin =
-# _QUIET_CALIB_REF_MS): the r13 compute-spread change made q01 ~35%
-# faster (1.19-1.41 s across the r7-r12 quiet closes on the old plan;
-# the r13 quiet close read 0.879/0.713 s pre/post at calib 95.3 —
-# ~1.0 s once scaled to the 108 ms canonical clock). The expected value
-# is scaled by the measured clock factor (:func:`_clock_factor`) before
-# gating, so a legitimately slower-but-quiet epoch (calib up to the
-# 1.08x calib band) is not false-flagged. Unlike the calib spin this
-# measures the actual thing — Spark executing a headline plan — so it
-# arbitrates epochs the load/calib probes mis-read in either direction.
-# Override per host with BENCH_SENTINEL_QUIET_S.
+# Reliability references. All of them were measured on the 32-core
+# bench host at sf0.1 on the warm min-of-N basis, so at any other sf,
+# or at BENCH_RUNS=1, none applies and the artifact is always stamped
+# `unreliable: true` (see :func:`_reliable`).
 #
-# Band history (VERDICT r12 item 1a): the original 1.25x band admitted
-# the settling gap between the quiet evidence and the genuinely
-# inflated captures — the r12 artifact's sentinel read 1.648 s (old
-# plan; quiet evidence then topped at 1.41), squeaked under the 1.25x
-# cut, and stamped `unreliable: false` on a 32.7 s warm total 2.7x the
-# same-code quiet close. 1.08x matches the calib band's philosophy.
+# Sentinel: q01 warm min-of-3, timed once before the headline loop and
+# once after the last measured query (the r12 contamination arrived
+# mid-run while the first reading stayed clean). 1.0 s sits above the
+# r13 quiet close's 0.879 pre / 0.713 post on the current plan; the
+# inflated captures read 1.6-2.4 s. A degraded first reading
+# backoff-polls for _SENTINEL_BUDGET_S before the loop starts.
 _SENTINEL_QUERY = "q01_pricing_summary"
 _QUIET_SENTINEL_REF_S = 1.0
 _SENTINEL_BAND = 1.08
+_SENTINEL_BUDGET_S = 300.0
+# load5 needs ~8 min to decay below 0.5 after a long test suite, which
+# is exactly the epoch a load1-only check mis-stamps as quiet
+_QUIET_BUDGET_S = 900.0
 
-
-def _clock_factor(calib_ms: float | None, calib_ref: float) -> float:
-    """Expected-time scale for the sentinel/per-query references, which
-    are expressed at the canonical clock (calib spin == ``calib_ref``).
-    A quiet epoch whose single-thread spin runs slower than canonical
-    (e.g. the 106-110 ms r7-r12 closes vs the 87-95 ms r13 close —
-    thermal/steal drift moves this host's effective clock ~25% between
-    rounds on IDENTICAL code) legitimately reads proportionally slower
-    per query; scale the reference up by the measured ratio so the
-    contamination checks compare against what THIS epoch's quiet
-    actually looks like. Clamped to [1.0, _QUIET_CALIB_BAND]: never
-    tighten below the canonical reference on fast clocks (single-thread
-    spin and 32-core Spark throughput do not correlate perfectly —
-    an unclamped fast-clock scale would false-flag), and never loosen
-    past the calib quiet band (a calib beyond it already fails the
-    pre-gate; scaling refs to a degraded clock would exonerate it)."""
-    if not calib_ms:
-        return 1.0
-    return min(_QUIET_CALIB_BAND, max(1.0, calib_ms / calib_ref))
-
-# Per-query quiet warm-min-of-3 references at sf0.1 (VERDICT r12 item
-# 3): the r12 artifact's contamination arrived MID-run — q03 8.5 s vs
-# quiet ~1.5-2.1, t04 4.6 vs ~1.3, d02 2.8 vs ~0.75 — while q01 itself
-# stayed clean, so a q01-only probe (even run twice) cannot flag a
-# co-tenant burst that lands between its two readings. These per-query
-# references turn the judge's manual arbitration into a machine check:
-# any query whose warm-min reads > _QUERY_CONTAM_BAND x its reference
-# (scaled by :func:`_clock_factor`) is self-reported in
+# Per-query quiet warm-min-of-3 references at sf0.1: the r12 artifact's
+# contamination hit q03 (8.5 s vs quiet ~1.5-2.1), t04 and d02 while
+# q01 itself stayed clean, so a q01-only probe cannot flag a co-tenant
+# burst that lands between its two readings. Any query whose warm-min
+# reads > _QUERY_CONTAM_BAND x its reference is self-reported in
 # `contaminated_queries`, and the artifact carries `epoch_factor` =
-# median of (measured / scaled reference) over every referenced query
-# — ~1.0 on a quiet epoch, the systematic inflation factor on a
-# degraded one. Values are expressed AT THE CANONICAL CLOCK (calib ==
-# _QUIET_CALIB_REF_MS). Refreshed at the r13 quiet close (10.312 s
-# total, calib 95.3 in-window — readings scaled by 108/95.3): queries
-# the r13 optimization round made faster carry the new close's scaled
-# reading; unchanged queries keep max(previous ref, scaled r13 close)
-# so one fast epoch cannot silently tighten a band. Refresh at each
-# quiet round close; 1.5x sits well past the measured <=18% min-of-3
-# noise spread (BENCH_NOISE.md conclusion 2). d14's reference is the
-# r13 interleaved loop A/B floor (front ~1.9 + loop ~3.9) plus the
-# fresh-session overhead its bench basis carries — its ~30-job
+# median of (measured / reference) over every referenced query — ~1.0
+# on a quiet epoch, the systematic inflation factor on a degraded one.
+# Refreshed at the r13 quiet close (10.312 s total): queries the r13
+# round made faster carry that close's reading x1.13 (its single-thread
+# clock ran 13% fast); unchanged queries keep max(previous ref, r13
+# close) so one fast epoch cannot silently tighten a band. Refresh at
+# each quiet round close; 1.5x sits well past the measured <=18%
+# min-of-3 noise spread (BENCH_NOISE.md conclusion 2). d14's ~20-job
 # iterative chain integrates co-tenant micro-bursts that single-join
 # plans dodge, so its quiet spread is the table's widest.
 _QUERY_CONTAM_BAND = 1.5
@@ -218,8 +154,8 @@ _QUIET_QUERY_REF_S = {
     # three single-distinct aggs crossJoined); the 1.14 old-plan ref
     # would leave the new ~0.4 s shape's contamination check blind.
     # 0.45 is the interleaved A/B min measured on a DEGRADED epoch
-    # (calib ~140 — i.e. a conservative ceiling for quiet); tighten at
-    # the next quiet close per the refresh convention above.
+    # (i.e. a conservative ceiling for quiet); tighten at the next
+    # quiet close per the refresh convention above.
     "q09_distinct_stats": 0.45,
     "q13_supplier_part_stats": 0.84,
     "q14_events_hourly": 0.57,
@@ -233,11 +169,9 @@ _QUIET_QUERY_REF_S = {
     "s01_cosine_topk": 0.68,
     # tracked extras (min-of-N basis, same as headline)
     # d14's plan changed in r14 (CC loop: delta propagation + gated
-    # broadcasts — the r13-ref 6.00 shape no longer exists): the r14
-    # close pair read 4.831 / 3.992 min-of-3 on clock-1.08 epochs
-    # (scaled ~4.5 / ~3.7); 4.60 = the interleaved A/B floor
-    # (front ~1.9 + loop ~2.0) plus the fresh-session overhead its
-    # ~20-job chain integrates — still the table's widest spread.
+    # broadcasts): 4.60 = the interleaved A/B floor (front ~1.9 + loop
+    # ~2.0) plus the fresh-session overhead of its job chain; the r14
+    # close pair read 4.831 / 3.992 min-of-3.
     "d14_verified_dedup_clusters": 4.60,
     "s09_ivf_topk_pruned": 1.48,
     "q36_spend_deciles": 1.06,
@@ -246,131 +180,111 @@ _QUIET_QUERY_REF_S = {
     "q50_ewma": 0.96,
     "d05_simhash_near_pairs": 0.90,
 }
-
-
-def _epoch_is_quiet(host: dict, ref: float) -> bool:
-    """VERDICT r11 item 1 (third iteration of the gate): quiet means
-    load1 AND load5 below 0.5 — load1 alone stamps "quiet" on a
-    still-settling host (the repo's own r10/r11 failure mode) — AND the
-    single-thread calib spin within 8% of the stored quiet reference
-    (every genuinely quiet close reads 106-110 ms; the two inflated
-    artifacts read 118.5 and 120.3 ms, both inside the old 15% band)."""
-    if host.get("load1") is None:  # unprobeable platform: calib only
-        return host["calib_spin_ms"] <= _QUIET_CALIB_BAND * ref
-    return (
-        host["load1"] < 0.5
-        and host["load5"] < 0.5
-        and host["calib_spin_ms"] <= _QUIET_CALIB_BAND * ref
-    )
-
-
-# Gate v5 (VERDICT r13 item 2): the epoch_factor ceiling below which
-# per-query evidence may exonerate a pre-gate that failed ONLY on the
-# calib clock band. The r13 artifact of record self-flagged at calib
-# 119.2/128.3 (zero load, both sentinels quiet, epoch_factor 0.76,
-# zero contaminated queries, best total ever recorded) — the
-# single-thread spin drifts ~15-25% between quiet epochs
-# (BENCH_NOISE.md Addendum 3) and does not track 32-core Spark
-# throughput, so when every query-level probe reads quiet the calib
-# band alone must not flag the artifact.
+# median measured/reference ceiling: the reliable captures since r13
+# read 0.66-0.88
 _EPOCH_FACTOR_QUIET_MAX = 1.1
 
 
-def _artifact_unreliable(
-    gate_quiet: bool,
-    sent_pre_s: float,
-    sent_post_s: float,
-    calib_mid_ms: float,
-    sent_ref: float = _QUIET_SENTINEL_REF_S,
-    calib_ref: float = _QUIET_CALIB_REF_MS,
-    clock: float = 1.0,
-    load_quiet: bool = False,
-    epoch_factor: float | None = None,
-    n_contaminated: int | None = None,
+def _load_quiet(load1: float | None, load5: float | None) -> bool:
+    """load1 AND load5 below 0.5: load1 alone reads quiet on a host
+    still settling after heavy work (the r10/r11 artifacts)."""
+    return load1 is not None and load1 < 0.5 and load5 < 0.5
+
+
+def _self_report(
+    measured: dict[str, float],
+) -> tuple[dict, float | None, list]:
+    """Per-query ratios against :data:`_QUIET_QUERY_REF_S`, their
+    median (``epoch_factor``; None when no referenced query was
+    measured) and the queries past :data:`_QUERY_CONTAM_BAND`."""
+    ratios = {
+        name: round(measured[name] / ref, 2)
+        for name, ref in _QUIET_QUERY_REF_S.items()
+        if name in measured
+    }
+    epoch_factor = (
+        round(sorted(ratios.values())[len(ratios) // 2], 2) if ratios else None
+    )
+    contaminated = sorted(
+        n for n, r in ratios.items() if r > _QUERY_CONTAM_BAND
+    )
+    return ratios, epoch_factor, contaminated
+
+
+def _reliable(
+    load1: float | None,
+    load5: float | None,
+    sent_pre_s: float | None,
+    sent_post_s: float | None,
+    epoch_factor: float | None,
+    n_contaminated: int | None,
 ) -> bool:
-    """Gate v5's reliability verdict (VERDICT r12 item 1 + r13 item 2;
-    ADVICE r12 bench.py:380). The sentinel must read quiet BOTH before
-    and after the headline loop — the r12 contamination arrived
-    mid-run, invisible to a pre-loop-only probe. A pre-gate-degraded
-    epoch is exonerated by EITHER (v4) the in-window calib probe
-    reading inside the quiet band, OR (v5, new) the full per-query
-    evidence reading quiet: pre-gate load rule passed (the pre-gate
-    failed only on the calib clock band), both sentinels quiet,
-    ``epoch_factor`` (median measured/quiet-ref ratio over every
-    referenced query) at most :data:`_EPOCH_FACTOR_QUIET_MAX`, and
-    ZERO contaminated queries — i.e. Spark itself, executing all the
-    measured plans, testifies the epoch is quiet even though the
-    single-thread spin drifted. A quiet pre-gate epoch is still
-    flagged if either sentinel reads degraded (the OS probes mis-stamp
-    settling hosts). ``clock`` scales the canonical-clock sentinel
-    reference to this epoch's measured clock (:func:`_clock_factor`)."""
-    cut = _SENTINEL_BAND * sent_ref * clock
-    sents_ok = sent_pre_s <= cut and sent_post_s <= cut
-    if gate_quiet:
-        return not sents_ok
-    if sents_ok and calib_mid_ms <= _QUIET_CALIB_BAND * calib_ref:
+    """The artifact's one reliability rule: the host load is quiet at
+    the end of the pre-Spark poll, both q01 sentinels read inside the
+    band, the median per-query ratio is at most
+    :data:`_EPOCH_FACTOR_QUIET_MAX` and no query is contaminated.
+    Missing evidence — no load averages, or no per-query self-report
+    off the sf0.1 warm basis — is never reliable."""
+    if None in (sent_pre_s, sent_post_s, epoch_factor, n_contaminated):
         return False
-    if (
-        sents_ok
-        and load_quiet
-        and epoch_factor is not None
+    cut = _SENTINEL_BAND * _QUIET_SENTINEL_REF_S
+    return (
+        _load_quiet(load1, load5)
+        and sent_pre_s <= cut
+        and sent_post_s <= cut
         and epoch_factor <= _EPOCH_FACTOR_QUIET_MAX
         and n_contaminated == 0
-    ):
-        return False
-    return True
-
-
-def _quiet_gated_host() -> tuple[dict, bool]:
-    """VERDICT r9 item 5 + r10 item 4 + r11 item 1: the artifact of
-    record should not need judge re-runs. Backoff-polls (15 s
-    doubling-ish toward 60 s) until the epoch is GENUINELY quiet per
-    :func:`_epoch_is_quiet` or the budget expires
-    (BENCH_QUIET_BUDGET_SEC; default 900 s — load5 needs ~8 min to
-    decay below 0.5 after a long suite, which is exactly the epoch the
-    load1-only gate mis-stamped). The give-up arm keeps the
-    machine-first top-level unreliable=True flag so a flagged artifact
-    still says so itself."""
-    ref = float(
-        os.environ.get("BENCH_CALIB_QUIET_MS", str(_QUIET_CALIB_REF_MS))
     )
-    budget = float(os.environ.get("BENCH_QUIET_BUDGET_SEC", "900"))
 
+
+def _polled_host(poll: bool = True) -> dict:
+    """Host stamp read after a load-only backoff poll (15 s growing
+    toward 60 s) that ends when :func:`_load_quiet` holds or the
+    :data:`_QUIET_BUDGET_S` budget runs out. ``poll=False`` stamps the
+    host once: when no reference applies, waiting cannot change the
+    verdict."""
     host = _host_conditions()
     t0 = time.monotonic()
-    wait = float(os.environ.get("BENCH_QUIET_WAIT_SEC", "15"))
+    wait = 15.0
     while (
-        not _epoch_is_quiet(host, ref)
-        and time.monotonic() - t0 + wait <= budget
+        poll
+        and host["load1"] is not None
+        and not _load_quiet(host["load1"], host["load5"])
+        and time.monotonic() - t0 + wait <= _QUIET_BUDGET_S
     ):
         print(
-            f"bench: epoch not quiet (load1={host['load1']}, "
-            f"load5={host['load5']}, calib={host['calib_spin_ms']}ms "
-            f"vs quiet ref {ref}ms); retrying in {wait:.0f}s "
-            f"(budget {budget:.0f}s)",
+            f"bench: host not quiet (load1={host['load1']}, "
+            f"load5={host['load5']}); retrying in {wait:.0f}s "
+            f"(budget {_QUIET_BUDGET_S:.0f}s)",
             file=sys.stderr,
         )
         time.sleep(wait)
         wait = min(wait * 1.7, 60.0)
         host = _host_conditions()
     host["quiet_gate"] = {
-        "calib_ref_ms": ref,
-        "calib_band": f"<= {_QUIET_CALIB_BAND}x ref",
         "load_rule": "load1 < 0.5 AND load5 < 0.5",
         "waited_sec": round(time.monotonic() - t0, 1),
         "verdict": (
             "quiet"
-            if _epoch_is_quiet(host, ref)
-            else "gave up still degraded"
+            if _load_quiet(host["load1"], host["load5"])
+            else "gave up still loaded"
+            if poll
+            else "not polled (no reference applies)"
         ),
     }
-    return host, not _epoch_is_quiet(host, ref)
+    return host
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    host, unreliable = _quiet_gated_host()
+    sf = _parse_sf(sf_dir)
+    runs = max(1, int(os.environ.get("BENCH_RUNS", "3")))
+    noise = int(os.environ.get("BENCH_NOISE", "0"))
+    # the references are sf0.1 warm-min-of-N figures: at another SF, on
+    # the cold single-run basis or in noise mode (no sentinels, no
+    # self-report) the artifact cannot be reliable, so nothing waits
+    on_ref = sf == 0.1 and runs >= 2 and not noise
+    host = _polled_host(poll=on_ref)
     spark = get_spark(
         app_name="liq_stream_spark_bench",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
@@ -393,7 +307,6 @@ def main() -> None:
         .save()
     )
 
-    runs = max(1, int(os.environ.get("BENCH_RUNS", "3")))
     # multi-run extras (min-of-N like the headline): the heavy operators
     # plus the bespoke-plan rewrites whose regressions a headline-only
     # bench would miss (VERDICT r6 item 2). BENCH_EXTRA_RUNS overrides
@@ -437,10 +350,10 @@ def main() -> None:
     # (VERDICT r7 item 5) — run every headline + tracked-extra query N
     # times on UNCHANGED code and emit the full per-run sample lists, so
     # the warm-run spread can be bounded once and cited (BENCH_NOISE.md)
-    # instead of folklore-calibrated per round. Not part of the driver
+    # instead of folklore-tuned per round. Not part of the driver
     # contract: the normal single-JSON-line output is unchanged when the
-    # env var is unset.
-    noise = int(os.environ.get("BENCH_NOISE", "0"))
+    # env var is unset. The samples carry no reliability verdict of
+    # their own, so the artifact is stamped unreliable.
     if noise:
         samples = {
             name: [round(run_query(name), 3) for _ in range(noise)]
@@ -453,7 +366,7 @@ def main() -> None:
                     "runs": noise,
                     "sf": sf,
                     "host": host,
-                    "unreliable": unreliable,
+                    "unreliable": True,
                     "samples": samples,
                 }
             )
@@ -461,32 +374,16 @@ def main() -> None:
         spark.stop()
         return
 
-    # Sentinel arbitration (VERDICT r11 item 1): the load/calib gate
-    # runs BEFORE Spark starts and can still mis-read a settling host
-    # in either direction. Before measuring anything of record, time
-    # one headline plan (q01, warm min-of-3 — the same basis as the
-    # headline figures) against its stored quiet reference; a sentinel
-    # past the band backoff-polls within its own budget, and a give-up
-    # flags the whole artifact unreliable. The sentinel runs double as
-    # q01's extra warm-up, which min-of-N already absorbs.
-    sent_ref = float(
-        os.environ.get(
-            "BENCH_SENTINEL_QUIET_S", str(_QUIET_SENTINEL_REF_S)
-        )
-    )
-    # the epoch's clock factor: references are canonical-clock values;
-    # a quiet-but-slower clock (calib inside the 1.08x band) reads
-    # proportionally slower everywhere, so scale expectations once here
-    calib_ref = float(
-        os.environ.get("BENCH_CALIB_QUIET_MS", str(_QUIET_CALIB_REF_MS))
-    )
-    clock = _clock_factor(host.get("calib_spin_ms"), calib_ref)
-    sent_cut = _SENTINEL_BAND * sent_ref * clock
-    sent_budget = float(os.environ.get("BENCH_SENTINEL_BUDGET_SEC", "300"))
-    # the stored reference was measured at sf0.1 — at other SFs the
-    # sentinel value is recorded but never gates (a smaller SF passes
-    # trivially, a larger one would false-flag every run)
-    gating = abs(sf - 0.1) < 1e-9 or "BENCH_SENTINEL_QUIET_S" in os.environ
+    # Pre-loop sentinel: before measuring anything of record, time one
+    # headline plan (q01, warm min-of-3 — the same basis as the headline
+    # figures) against its stored quiet reference; a reading past the
+    # band backoff-polls within its own budget, unless the host load
+    # has already decided the verdict. It measures an actual headline
+    # plan, so it catches epochs the load average mis-reads. The
+    # sentinel runs double as q01's extra warm-up, which min-of-N
+    # already absorbs.
+    sent_cut = _SENTINEL_BAND * _QUIET_SENTINEL_REF_S
+    retry = on_ref and _load_quiet(host["load1"], host["load5"])
     t_sent = time.monotonic()
     # the sentinel's FIRST run is the session's first execution of q01
     # — i.e. its true cold figure; capture it here so the headline
@@ -496,42 +393,39 @@ def main() -> None:
     sentinel_cold = round(sent_first, 3)
     sent = min(sent_first, *(run_query(_SENTINEL_QUERY) for _ in range(2)))
     while (
-        gating
+        retry
         and sent > sent_cut
-        and time.monotonic() - t_sent + 30 <= sent_budget
+        and time.monotonic() - t_sent + 30 <= _SENTINEL_BUDGET_S
     ):
         print(
             f"bench: sentinel {_SENTINEL_QUERY} read {sent:.3f}s vs "
-            f"quiet ref {sent_ref}s (band {_SENTINEL_BAND}x, clock "
-            f"{clock:.3f}) — epoch degraded in a way the load/calib "
-            f"gate missed; retrying in 30s (budget {sent_budget:.0f}s)",
+            f"quiet ref {_QUIET_SENTINEL_REF_S}s (band {_SENTINEL_BAND}x)"
+            f" — epoch degraded in a way the load average missed; "
+            f"retrying in 30s (budget {_SENTINEL_BUDGET_S:.0f}s)",
             file=sys.stderr,
         )
         time.sleep(30)
         sent = min(run_query(_SENTINEL_QUERY) for _ in range(3))
-    sent_quiet = (not gating) or sent <= sent_cut
-    # the in-window calib probe (ADVICE r12): evidence from INSIDE the
-    # measurement window, required alongside the sentinel to exonerate
-    # a pre-gate-degraded epoch — one quiet query cannot vouch for how
-    # contention hits the other fifteen plans
-    calib_mid = _calib_spin_ms()
-    host["calib_spin_ms_in_window"] = calib_mid
+
+    def sentinel_block(warm: float, degraded: str) -> dict:
+        return {
+            "query": _SENTINEL_QUERY,
+            "warm_min_sec": round(warm, 3),
+            "quiet_ref_sec": _QUIET_SENTINEL_REF_S,
+            "band": f"<= {_SENTINEL_BAND}x ref",
+            "verdict": (
+                "recorded only (no reference applies)"
+                if not on_ref
+                else "quiet"
+                if warm <= sent_cut
+                else degraded
+            ),
+        }
+
     host["sentinel"] = {
-        "query": _SENTINEL_QUERY,
-        "warm_min_sec": round(sent, 3),
-        "quiet_ref_sec": sent_ref,
-        "band": f"<= {_SENTINEL_BAND}x ref",
-        "clock_factor": round(clock, 3),
+        **sentinel_block(sent, "gave up still degraded"),
         "waited_sec": round(time.monotonic() - t_sent, 1),
-        "verdict": (
-            "quiet"
-            if sent_quiet and gating
-            else "recorded only (ref is sf0.1)"
-            if not gating
-            else "gave up still degraded"
-        ),
     }
-    gate_quiet = not unreliable
 
     # the sentinel query's cold slot is pre-filled with its genuinely
     # cold first run (above); setdefault keeps it
@@ -570,86 +464,28 @@ def main() -> None:
         extra[name] = first
         extra_warm2[name] = min(first, round(run_query(name), 3))
 
-    # post-loop sentinel (VERDICT r12 item 1b): the r12 contamination
-    # arrived MID-run — q03 tripled while the pre-loop sentinel read
-    # clean. Re-time the sentinel after the last measured query; gate
-    # v4 requires BOTH readings quiet or the artifact self-flags. No
-    # backoff-poll here: the measurements are already taken, waiting
-    # cannot un-contaminate them.
+    # post-loop sentinel: a burst can land mid-run while the pre-loop
+    # sentinel reads clean (r12: q03 tripled). No backoff-poll here: the
+    # measurements are already taken, waiting cannot un-contaminate them.
     sent_post = min(run_query(_SENTINEL_QUERY) for _ in range(3))
-    sent_post_quiet = (not gating) or sent_post <= sent_cut
-    host["sentinel_post"] = {
-        "query": _SENTINEL_QUERY,
-        "warm_min_sec": round(sent_post, 3),
-        "quiet_ref_sec": sent_ref,
-        "band": f"<= {_SENTINEL_BAND}x ref",
-        "verdict": (
-            "quiet"
-            if sent_post_quiet and gating
-            else "recorded only (ref is sf0.1)"
-            if not gating
-            else "degraded (mid-run contamination)"
-        ),
-    }
-    # informational post-run probe: a calib re-read after the last
-    # query bounds whether the epoch degraded MID-run (not gating —
-    # the bench's own 32-core load can leave this a few ms warm)
-    host["calib_spin_ms_post"] = _calib_spin_ms()
-
-    # per-query contamination self-report (VERDICT r12 item 3): ratio
-    # every measured warm-min against its recorded quiet reference;
-    # epoch_factor is the median ratio (~1.0 quiet, the systematic
-    # inflation factor on a degraded epoch), contaminated_queries the
-    # localized bursts the sentinels can miss. >= 3 flagged queries is
-    # a systemic mid-run burst and flags the whole artifact. Computed
-    # BEFORE the reliability verdict since gate v5 (VERDICT r13 item
-    # 2) feeds the per-query evidence into the exoneration decision.
-    # the references are sf0.1 warm-min-of-N figures: at another SF, or
-    # on the cold single-run basis, the ratios compare different things
-    # (a cold run at sf0.001 is pure plan/codegen overhead and reads 3x
-    # a warm sf0.1 figure) — compute the self-report only on the basis
-    # the references were measured on
-    measured = {**steady, **extra_min}
-    if gating and runs >= 2:
-        ratios = {
-            name: round(measured[name] / (ref * clock), 2)
-            for name, ref in _QUIET_QUERY_REF_S.items()
-            if name in measured
-        }
-    else:
-        ratios = {}
-    contaminated = sorted(
-        n for n, r in ratios.items() if r > _QUERY_CONTAM_BAND
-    )
-    epoch_factor = (
-        round(sorted(ratios.values())[len(ratios) // 2], 2)
-        if ratios
-        else None
+    host["sentinel_post"] = sentinel_block(
+        sent_post, "degraded (mid-run contamination)"
     )
 
-    if gating:
-        unreliable = _artifact_unreliable(
-            gate_quiet,
-            sent,
-            sent_post,
-            calib_mid,
-            sent_ref,
-            clock=clock,
-            # pre-gate LOAD verdict only (the v5 arm exists exactly for
-            # epochs whose pre-gate failed on the calib clock band
-            # while the machine was otherwise idle)
-            load_quiet=(
-                host.get("load1") is not None
-                and host["load1"] < 0.5
-                and host["load5"] < 0.5
-            ),
-            epoch_factor=epoch_factor,
-            n_contaminated=len(contaminated),
-        )
-    else:
-        unreliable = unreliable or not (sent_quiet and sent_post_quiet)
-    if len(contaminated) >= 3:
-        unreliable = True
+    # per-query contamination self-report, computed only on the basis
+    # the references were measured on (a cold run at sf0.001 is pure
+    # plan/codegen overhead and reads 3x a warm sf0.1 figure)
+    ratios, epoch_factor, contaminated = (
+        _self_report({**steady, **extra_min}) if on_ref else ({}, None, [])
+    )
+    unreliable = not _reliable(
+        host["load1"],
+        host["load5"],
+        sent,
+        sent_post,
+        epoch_factor,
+        len(contaminated),
+    )
 
     total = round(sum(steady.values()), 3)
     basis = "cold-single-run" if runs == 1 else f"warm-min-of-{runs}"
@@ -705,19 +541,14 @@ def main() -> None:
         "epoch_factor": epoch_factor,
         "contaminated_queries": contaminated,
         "host": {
-            "load1": host.get("load1"),
-            "load5": host.get("load5"),
-            "calib_spin_ms": host.get("calib_spin_ms"),
-            "calib_spin_ms_in_window": calib_mid,
-            "calib_spin_ms_post": host.get("calib_spin_ms_post"),
+            "load1": host["load1"],
+            "load5": host["load5"],
             "gate": host["quiet_gate"]["verdict"],
             "sentinel_warm_s": round(sent, 3),
             "sentinel_post_warm_s": round(sent_post, 3),
         },
-        # machine-first verdict (VERDICT r9 item 5, gate v4): True means
-        # the epoch failed the pre-gate + double-sentinel + in-window
-        # calib discipline and the numbers must not be compared across
-        # rounds.
+        # machine-first verdict (:func:`_reliable`): True means the
+        # numbers must not be compared across rounds.
         "unreliable": unreliable,
     }
     line = json.dumps(record)

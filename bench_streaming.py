@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import bench  # noqa: E402  (repo-root module: host stamp + quiet gate)
+import bench  # noqa: E402  (repo-root module: host stamp + load poll)
 from liq_stream_spark.session import get_spark  # noqa: E402
 from liq_stream_spark.sinks import FanOutConfig  # noqa: E402
 from liq_stream_spark.streaming.pipeline import run_pipeline  # noqa: E402
@@ -28,6 +28,41 @@ from liq_stream_spark.streaming.pipeline import run_pipeline  # noqa: E402
 N_EVENTS = int(os.environ.get("STREAM_BENCH_EVENTS", "100000"))
 EVENTS_PER_FRAME = 10
 FRAMES_PER_FILE = 500
+
+# The streaming bench has no per-query references, so its in-window
+# evidence is a fixed single-thread spin timed right after each pass.
+# Every quiet close through r12 read it at 106-110 ms on the bench host;
+# the inflated r9/r11 captures read 118.5 and 120.3.
+_QUIET_CALIB_REF_MS = 108.0
+_QUIET_CALIB_BAND = 1.08
+
+
+def _calib_spin_ms() -> float:
+    """Fixed single-thread integer loop (min-of-3) — a Spark-independent
+    probe of effective CPU speed comparable across artifacts on the
+    same host."""
+
+    def spin() -> float:
+        t0 = time.perf_counter()
+        x = 0
+        for i in range(2_000_000):
+            x += i * i
+        return time.perf_counter() - t0
+
+    return round(min(spin() for _ in range(3)) * 1000, 1)
+
+
+def _reliable(
+    load1: float | None, load5: float | None, best_calib_ms: float
+) -> bool:
+    """Load quiet after the shared pre-Spark poll, and the calib probe
+    adjacent to the BEST pass — the one the headline value comes from —
+    inside the quiet band (a probe after another pass cannot vouch for
+    the best one, and loadavg cannot either: the passes inflate it)."""
+    return (
+        bench._load_quiet(load1, load5)
+        and best_calib_ms <= _QUIET_CALIB_BAND * _QUIET_CALIB_REF_MS
+    )
 
 
 def gen_frames(root: str) -> int:
@@ -67,11 +102,9 @@ def gen_frames(root: str) -> int:
 
 
 def main() -> None:
-    # same epoch stamping + quiet gate as the headline bench (VERDICT
-    # r11 "what's wrong" item 3: the streaming band was the one perf
-    # surface with no capture-conditions record — a 6-8k reading on a
-    # decaying epoch was unreadable against the 8-9k quiet band)
-    host, unreliable = bench._quiet_gated_host()
+    # same epoch stamping + load poll as the headline bench: a 6-8k
+    # reading on a decaying epoch is unreadable against the quiet band
+    host = bench._polled_host()
     work = tempfile.mkdtemp(prefix="liq_stream_bench_")
     src = os.path.join(work, "binance")
     total = gen_frames(src)
@@ -109,31 +142,11 @@ def main() -> None:
         written = spark.read.parquet(out).count()
         rows_per_pass.append(written)
         passes.append(round(written / elapsed, 1))
-        # per-pass calib: a probe adjacent to each measurement, so a
-        # reliability call about pass i has evidence FROM pass i's
-        # window (loadavg is useless here — the pass itself inflates it)
-        calibs.append(bench._calib_spin_ms())
+        # per-pass calib: evidence from each pass's own window
+        calibs.append(_calib_spin_ms())
     host["calib_spin_ms_per_pass"] = calibs
-    # a pre-gate give-up can be a transient calib misread (observed:
-    # 218 ms on an idle host mid-best-ever passes — co-tenant steal
-    # hits the 100 ms spin far harder than the 32-core job). Exonerate
-    # ONLY if the probe adjacent to the BEST pass — the one the headline
-    # value comes from — is inside the quiet band: a probe that merely
-    # reads quiet after the epoch cleared cannot vouch for passes it
-    # did not cover.
-    if unreliable:
-        ref = float(
-            os.environ.get(
-                "BENCH_CALIB_QUIET_MS", str(bench._QUIET_CALIB_REF_MS)
-            )
-        )
-        best_calib = calibs[passes.index(max(passes))]
-        if best_calib <= bench._QUIET_CALIB_BAND * ref:
-            unreliable = False
-            host["quiet_gate"]["verdict"] = (
-                "pre-gate gave up; the best pass's adjacent calib "
-                "probe read quiet"
-            )
+    best = passes.index(max(passes))
+    unreliable = not _reliable(host["load1"], host["load5"], calibs[best])
     print(
         json.dumps(
             {
@@ -146,7 +159,7 @@ def main() -> None:
                 # comes from (ADVICE r12: pairing the best pass's rate
                 # with the LAST pass's count would hide a divergence);
                 # the per-pass list makes any divergence visible
-                "rows": rows_per_pass[passes.index(max(passes))],
+                "rows": rows_per_pass[best],
                 "rows_per_pass": rows_per_pass,
                 "generated": total,
                 "host": host,
