@@ -22,13 +22,14 @@ the round-6 bespoke-plan rewrites q36/q45/q47/q50/d05 (VERDICT r6 item
 2: exactly the queries with hand-built distributed plans need a tracked
 regression surface) join the multi-run set under "extra_queries_min" at
 min-of-N like the headline. d16 (exact PPJoin Jaccard verifier, ~85 s a
-run — 8x the next-slowest query) is DEMOTED to on-demand (VERDICT r6
-item 4b): it is the documented exact-verify floor for the ~11 s
-approximate d14 chain, not a per-round regression surface, and two runs
-of it cost more wall-clock than the entire rest of the bench; set
-BENCH_D16=1 to include it (min-of-2). d14 — the fast path users actually
-run — is benched in its place. The remaining extras stay single-run
-informative figures.
+run — 8x the next-slowest query) is not benched (VERDICT r6 item 4b): it
+is the documented exact-verify floor for the ~11 s approximate d14
+chain, not a per-round regression surface, and two runs of it cost more
+wall-clock than the entire rest of the bench; time it on demand with
+``python -m liq_stream_spark.tools ab d16_jaccard_prefix_filter
+d16_jaccard_prefix_filter``. d14 — the fast path users actually run — is
+benched in its place. The remaining extras stay single-run informative
+figures.
 
 Both output lines carry the capture conditions and a machine-first
 ``unreliable`` verdict (:func:`_reliable`): only a warm run at sf0.1 on
@@ -309,23 +310,16 @@ def main() -> None:
 
     # multi-run extras (min-of-N like the headline): the heavy operators
     # plus the bespoke-plan rewrites whose regressions a headline-only
-    # bench would miss (VERDICT r6 item 2). BENCH_EXTRA_RUNS overrides
-    # for every multi-run extra; 0/unset keeps the per-query defaults
-    extra_override = int(os.environ.get("BENCH_EXTRA_RUNS", "0"))
-    extra_multi = {
-        "d14_verified_dedup_clusters": extra_override or runs,
-        "s09_ivf_topk_pruned": extra_override or runs,
-        "q36_spend_deciles": extra_override or runs,
-        "q45_twap": extra_override or runs,
-        "q47_anomaly_zscore": extra_override or runs,
-        "q50_ewma": extra_override or runs,
-        "d05_simhash_near_pairs": extra_override or runs,
-    }
-    # on-demand: d16's exact-Jaccard verify floor, ~85 s/run (module doc)
-    if os.environ.get("BENCH_D16"):
-        extra_multi["d16_jaccard_prefix_filter"] = extra_override or min(
-            2, runs
-        )
+    # bench would miss (VERDICT r6 item 2)
+    extra_multi = [
+        "d14_verified_dedup_clusters",
+        "s09_ivf_topk_pruned",
+        "q36_spend_deciles",
+        "q45_twap",
+        "q47_anomaly_zscore",
+        "q50_ewma",
+        "d05_simhash_near_pairs",
+    ]
     # informative single-run timings for operators added after the
     # headline set froze — NOT part of the headline total, so
     # cross-round totals stay comparable
@@ -357,7 +351,7 @@ def main() -> None:
     if noise:
         samples = {
             name: [round(run_query(name), 3) for _ in range(noise)]
-            for name in HEADLINE + list(extra_multi)
+            for name in HEADLINE + extra_multi
         }
         print(
             json.dumps(
@@ -441,12 +435,10 @@ def main() -> None:
         steady[name] = round(best, 3)
 
     extra_min: dict[str, float] = {}
-    for name, n_runs in extra_multi.items():
+    for name in extra_multi:
         if name not in REGISTRY:
             continue
-        extra_min[name] = round(
-            min(run_query(name) for _ in range(n_runs)), 3
-        )
+        extra_min[name] = round(min(run_query(name) for _ in range(runs)), 3)
     # each single-run extra is timed once (the figure published since
     # r5/r6 — kept unchanged under its existing key), then ONCE more:
     # the min of the two rides along as a warm figure. The r13 close
@@ -505,8 +497,8 @@ def main() -> None:
         "runs_per_query": runs,
         "cold_total_sec": round(sum(cold.values()), 3),
         "cold_queries": cold,
-        # min-of-N for the heavy extras (d16 min-of-2, see module
-        # doc); single-run figures below carry no precision claim
+        # min-of-N for the heavy extras; single-run figures below
+        # carry no precision claim
         "extra_queries_min": extra_min,
         "extra_queries_single_run": extra,
         # warm min-of-2 companions for the single-run tier (r13):

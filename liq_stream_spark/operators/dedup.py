@@ -969,7 +969,8 @@ def _cc_loop(edges: DataFrame, max_iters: int) -> DataFrame:
     # nbr_min_full) row-by-row; pinned by the union-find property test
     # and the large-regime equality test in tests/test_llm_ops.py, and
     # checksum-verified against the r13 loop on d14's full sf0.1 pair
-    # set (tools_r14/cc_lab.py).
+    # set (OPTIMIZATION_r14.md §1; lab script `git show
+    # f538182:tools_r14/cc_lab.py`).
     #
     # BROADCAST gate (r14, guide §3.1): when the exact node count
     # (read off round 1's convergence aggregate, no extra job) says the
@@ -994,7 +995,8 @@ def _cc_loop(edges: DataFrame, max_iters: int) -> DataFrame:
     # amortizes over every remaining round. In the small regime the
     # broadcast-hash joins only ever STREAM the edge pin, so the
     # checkpoint is kept as-is (the re-pin's exchange+sort measured as
-    # a pure ~0.3 s fixture tax, tools_r14/cc_lab.py).
+    # a pure ~0.3 s fixture tax, OPTIMIZATION_r14.md §1; lab script
+    # `git show f538182:tools_r14/cc_lab.py`).
     from liq_stream_spark.operators.skew import broadcast_row_budget
 
     bcast_rows = broadcast_row_budget(edges.sparkSession)

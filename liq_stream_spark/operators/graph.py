@@ -102,7 +102,8 @@ def pagerank(
     #   exchanged at all — the r13 lazy-checkpoint pin is already the
     #   optimal shape, and an up-front repartition+sort would be pure
     #   added cost (measured +0.25 s on g01's 2.3 s fixture figure,
-    #   tools_r14/pr_lab.py; explicit broadcast HINTS also measured
+    #   OPTIMIZATION_r14.md §3, lab script `git show
+    #   ec2963b:tools_r14/pr_lab.py`; explicit broadcast HINTS also measured
     #   slower than AQE's own conversion, +0.45 s, and are not used).
     #
     # - LARGE graphs (ranks cannot broadcast — the 100 TB regime): the

@@ -7,6 +7,13 @@ registry (the registry is the source of truth the driver executes), and
 ``python -m liq_stream_spark.tools drive [--sf DIR] [name ...]`` to run
 registered queries against their DuckDB oracles — the local mirror of
 the external correctness gate, usable per-query while iterating.
+
+The other subcommands: ``parity`` (run-twice determinism at scale),
+``profile`` (per-stage REST metrics), ``maintain`` (index maintenance
+window), ``ab A B [--sf DIR] [--reps N] [--plans DIR]`` (interleaved
+same-session A/B of two builders behind a row-canon equality check) and
+``scale SRC OUT [--copies N] [--only T,...]`` (derive a larger tier from
+a fixture directory).
 """
 
 from __future__ import annotations
@@ -315,6 +322,35 @@ def plans_md(sf_dir: str = "/root/testdata/sf0.01") -> str:
     return "\n".join(header + rows) + "\n"
 
 
+def _check_names(names: list[str]) -> None:
+    """Exit on names the registry does not hold: before the ~30 s Spark
+    startup, with the clean-error convention main() uses for subcommand
+    typos."""
+    from liq_stream_spark.plans import REGISTRY
+
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        raise SystemExit(
+            f"unknown query name(s): {', '.join(unknown)} "
+            f"(see QUERIES.md for the registry)"
+        )
+
+
+def _collect_canon(build, spark, sf_dir: str):
+    """Build and collect one run inside its own ``pins.scope()`` (a
+    second run must not read the first run's cached blocks) and
+    canonicalize it with ``compare.frame_repr``, the harness's
+    order-insensitive canon. Returns the frame, whose executed plan
+    stays readable, and the ``(names, rows)`` canon."""
+    from liq_stream_spark import pins
+    from liq_stream_spark.compare import frame_repr
+
+    with pins.scope():
+        sdf = build(spark, sf_dir)
+        rows = [tuple(r) for r in sdf.collect()]
+    return sdf, frame_repr(sdf.columns, rows)
+
+
 def drive(names: list[str] | None = None, sf_dir: str = "/root/testdata/sf0.01") -> bool:
     """Run registered queries through Spark AND their DuckDB oracles on
     ``sf_dir``, comparing row count, column names, and the same
@@ -324,21 +360,13 @@ def drive(names: list[str] | None = None, sf_dir: str = "/root/testdata/sf0.01")
     driven query matches. Queries without an oracle run rows-only."""
     import duckdb
 
-    from liq_stream_spark import pins
     from liq_stream_spark.compare import frame_repr
     from liq_stream_spark.plans import REGISTRY
     from liq_stream_spark.schema import TESTDATA_TABLES
     from liq_stream_spark.session import get_spark
 
     todo = names or list(REGISTRY)
-    unknown = [n for n in todo if n not in REGISTRY]
-    if unknown:
-        # fail fast, before the ~30 s Spark startup, with the same
-        # clean-error convention main() uses for subcommand typos
-        raise SystemExit(
-            f"unknown query name(s): {', '.join(unknown)} "
-            f"(see QUERIES.md for the registry)"
-        )
+    _check_names(todo)
 
     # progress bars share stderr with the per-query OK/FAIL lines and
     # their \r rewrites routinely garble them in captured output
@@ -356,17 +384,13 @@ def drive(names: list[str] | None = None, sf_dir: str = "/root/testdata/sf0.01")
     for name in todo:
         q = REGISTRY[name]
         try:
-            with pins.scope():
-                sdf = q.build(spark, sf_dir)
-                scols = sdf.columns
-                srows = [tuple(r) for r in sdf.collect()]
+            _, (snames, sb) = _collect_canon(q.build, spark, sf_dir)
             if q.oracle is None:
-                print(f"{name}: rows-only ran, {len(srows)} rows")
+                print(f"{name}: rows-only ran, {len(sb)} rows")
                 continue
             res = con.execute(q.oracle)
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
-            snames, sb = frame_repr(scols, srows)
             dnames, db = frame_repr(dcols, drows)
             names_ok = snames == dnames
             nm = sum(1 for a, b in zip(sb, db) if a != b) + abs(
@@ -413,12 +437,7 @@ def profile(
     from liq_stream_spark.plans import REGISTRY
     from liq_stream_spark.session import get_spark
 
-    unknown = [n for n in names if n not in REGISTRY]
-    if unknown:
-        raise SystemExit(
-            f"unknown query name(s): {', '.join(unknown)} "
-            f"(see QUERIES.md for the registry)"
-        )
+    _check_names(names)
     spark = get_spark(
         extra_conf={
             "spark.ui.enabled": "true",
@@ -525,17 +544,10 @@ def parity(
     import os
     import time
 
-    from liq_stream_spark import pins
-    from liq_stream_spark.compare import frame_repr
     from liq_stream_spark.plans import REGISTRY
     from liq_stream_spark.session import get_spark
 
-    unknown = [n for n in names if n not in REGISTRY]
-    if unknown:
-        raise SystemExit(
-            f"unknown query name(s): {', '.join(unknown)} "
-            f"(see QUERIES.md for the registry)"
-        )
+    _check_names(names)
     spark = get_spark(
         master="local[8]",
         shuffle_partitions=8,
@@ -546,15 +558,9 @@ def parity(
         q = REGISTRY[name]
         try:
             t0 = time.perf_counter()
-            reprs = []
-            for _ in range(2):
-                # one scope per run: the second run must not read the
-                # first run's cached blocks
-                with pins.scope():
-                    sdf = q.build(spark, sf_dir)
-                    rows = [tuple(r) for r in sdf.collect()]
-                reprs.append(frame_repr(sdf.columns, rows))
-            (n1, b1), (n2, b2) = reprs
+            (_, (n1, b1)), (_, (n2, b2)) = (
+                _collect_canon(q.build, spark, sf_dir) for _ in range(2)
+            )
             good = n1 == n2 and b1 == b2
             note = ""
             expected = _PARITY_EXPECTED_ROWS_SF01.get(name)
@@ -584,6 +590,195 @@ def parity(
             ok = False
             print(f"{name}: ERROR {type(e).__name__}: {str(e)[:300]}")
     return ok
+
+
+def _arm(spec: str):
+    """The builder an ``ab`` arm names: a registered query, or
+    ``module:function`` where the function takes ``(spark, sf_dir)`` and
+    returns a DataFrame. The module must be on PYTHONPATH: the Python
+    workers import it too, for any UDF it defines."""
+    import importlib
+
+    from liq_stream_spark.plans import REGISTRY
+
+    if ":" not in spec:
+        return REGISTRY[spec].build
+    mod, _, fn = spec.partition(":")
+    try:
+        return getattr(importlib.import_module(mod), fn)
+    except (ImportError, AttributeError) as e:
+        raise SystemExit(f"arm {spec!r}: {e}") from None
+
+
+def _spread(runs: list[float]) -> dict:
+    """min, median and interquartile range of one arm's runs."""
+    import statistics
+
+    q1, _, q3 = (
+        statistics.quantiles(runs, n=4, method="inclusive")
+        if len(runs) > 1
+        else runs * 3
+    )
+    return {
+        "runs": runs,
+        "min": min(runs),
+        "median": round(statistics.median(runs), 4),
+        "iqr": round(q3 - q1, 3),
+    }
+
+
+def ab_verdict(a_runs: list[float], b_runs: list[float]) -> tuple[int, str]:
+    """``(pairs B won, verdict)`` for paired run times (lower is
+    better). "resolved" needs B to win at least nine tenths of the pairs,
+    a tie counting for neither side, and B's median to sit below A's by
+    more than A's interquartile range; anything else is "unresolved"."""
+    import statistics
+
+    wins = sum(b < a for a, b in zip(a_runs, b_runs))
+    gap = statistics.median(a_runs) - statistics.median(b_runs)
+    resolved = 10 * wins >= 9 * len(a_runs) and gap > _spread(a_runs)["iqr"]
+    return wins, "resolved" if resolved else "unresolved"
+
+
+def ab(
+    a: str,
+    b: str,
+    sf_dir: str,
+    reps: int = 10,
+    plans_dir: str | None = None,
+) -> bool:
+    """Interleaved A/B of two arms (:func:`_arm`) in one session shaped
+    like bench.py's. Each arm is first built and collected once, untimed,
+    and the two row canons must match; on a mismatch nothing is timed.
+    Then ``reps`` pairs run, the first arm alternating from pair to pair,
+    each run a build plus noop write in its own ``pins.scope()``. Prints
+    one JSON line (per-arm runs, min, median and IQR, pairs B won, the
+    :func:`ab_verdict`, load average) and returns whether the canons
+    matched. ``plans_dir`` receives each arm's formatted executed plan."""
+    import json
+    import os
+    import time
+
+    from liq_stream_spark import pins
+    from liq_stream_spark.session import get_spark
+
+    if reps < 1:
+        raise SystemExit(f"--reps must be at least 1, got {reps}")
+    _check_names([s for s in (a, b) if ":" not in s])
+    arms = {"A": (a, _arm(a)), "B": (b, _arm(b))}
+    spark = get_spark(
+        app_name="liq_stream_spark_ab",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    canon = {}
+    for label, (spec, build) in arms.items():
+        sdf, canon[label] = _collect_canon(build, spark, sf_dir)
+        if plans_dir:
+            os.makedirs(plans_dir, exist_ok=True)
+            path = os.path.join(
+                plans_dir, f"{label}_{spec.replace(':', '.')}.txt"
+            )
+            with open(path, "w") as f:
+                f.write(
+                    spark._jvm.PythonSQLUtils.explainString(
+                        sdf._jdf.queryExecution(), "formatted"
+                    )
+                )
+    out = {
+        "A": a,
+        "B": b,
+        "sf": sf_dir,
+        "rows": {label: len(c[1]) for label, c in canon.items()},
+        "checksum_equal": canon["A"] == canon["B"],
+    }
+    if out["checksum_equal"]:
+
+        def timed(build) -> float:
+            t0 = time.perf_counter()
+            with pins.scope():
+                build(spark, sf_dir).write.mode("overwrite").format(
+                    "noop"
+                ).save()
+            return round(time.perf_counter() - t0, 3)
+
+        runs: dict[str, list[float]] = {"A": [], "B": []}
+        for i in range(reps):
+            for label in "AB" if i % 2 == 0 else "BA":
+                runs[label].append(timed(arms[label][1]))
+        out["arms"] = {label: _spread(r) for label, r in runs.items()}
+        out["b_wins"], out["verdict"] = ab_verdict(runs["A"], runs["B"])
+        out["pairs"] = reps
+    try:
+        out["load"] = [round(x, 2) for x in os.getloadavg()[:2]]
+    except OSError:  # platform without load averages
+        out["load"] = None
+    print(json.dumps(out))
+    return out["checksum_equal"]
+
+
+# The scale-tier recipe: each fact table's primary key, shifted by
+# i * _SCALE_KEY_SHIFT in copy i. Foreign keys into the dimensions stay,
+# so every join still resolves.
+_SCALE_FACTS = {
+    "lineitem": "l_orderkey",
+    "orders": "o_orderkey",
+    "events": "event_id",
+    "documents": "doc_id",
+}
+_SCALE_DIMS = ["customer", "supplier", "part", "nation", "region", "embeddings"]
+_SCALE_KEY_SHIFT = 10**9
+
+
+def scale(
+    src: str, out: str, copies: int = 10, only: set[str] | None = None
+) -> None:
+    """Derive a scale tier from the fixture directory ``src`` into
+    ``out``: every fact table in ``only`` (all four when None) is unioned
+    ``copies`` times with its key shifted per copy and written in
+    ``max(8, copies)`` partitions; dimensions, and facts outside
+    ``only``, are copied verbatim. Deterministic: no randomness, no
+    timestamps. sf0.1 is task-scheduling-bound at 32 cores, so a
+    low-core/high-core ratio needs a tier like this to separate parallel
+    from scheduling-bound work."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from liq_stream_spark.session import get_spark
+
+    if copies < 1:
+        raise SystemExit(f"--copies must be at least 1, got {copies}")
+    unknown = sorted((only or set()) - set(_SCALE_FACTS))
+    if unknown:
+        raise SystemExit(
+            f"--only names no fact table: {', '.join(unknown)} "
+            f"(fact tables: {', '.join(_SCALE_FACTS)})"
+        )
+    spark = get_spark(
+        app_name="liq_stream_spark_scale",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    os.makedirs(out, exist_ok=True)
+    facts = [t for t in _SCALE_FACTS if not only or t in only]
+    for t in facts:
+        df = spark.read.parquet(f"{src}/{t}.parquet")
+        key = _SCALE_FACTS[t]
+        parts = [
+            df.withColumn(key, F.col(key) + F.lit(i * _SCALE_KEY_SHIFT))
+            for i in range(copies)
+        ]
+        big = parts[0]
+        for c in parts[1:]:
+            big = big.unionAll(c)
+        big.repartition(max(8, copies)).write.mode("overwrite").parquet(
+            f"{out}/{t}.parquet"
+        )
+        print(t, spark.read.parquet(f"{out}/{t}.parquet").count())
+    for t in _SCALE_DIMS + [t for t in _SCALE_FACTS if t not in facts]:
+        spark.read.parquet(f"{src}/{t}.parquet").write.mode(
+            "overwrite"
+        ).parquet(f"{out}/{t}.parquet")
+        print(t, "copied")
 
 
 def maintain(
@@ -831,11 +1026,33 @@ def main() -> None:
         ns = ap.parse_args(sys.argv[2:])
         profile(ns.names, ns.sf, ns.top)
         return
+    elif cmd == "ab":
+        import argparse
+
+        ap = argparse.ArgumentParser(prog="tools ab")
+        ap.add_argument("a", metavar="A")
+        ap.add_argument("b", metavar="B")
+        ap.add_argument("--sf", default="/root/testdata/sf0.1")
+        ap.add_argument("--reps", type=int, default=10)
+        ap.add_argument("--plans", metavar="DIR")
+        ns = ap.parse_args(sys.argv[2:])
+        raise SystemExit(0 if ab(ns.a, ns.b, ns.sf, ns.reps, ns.plans) else 1)
+    elif cmd == "scale":
+        import argparse
+
+        ap = argparse.ArgumentParser(prog="tools scale")
+        ap.add_argument("src", metavar="SRC")
+        ap.add_argument("out", metavar="OUT")
+        ap.add_argument("--copies", type=int, default=10)
+        ap.add_argument("--only", metavar="T,...", default="")
+        ns = ap.parse_args(sys.argv[2:])
+        scale(ns.src, ns.out, ns.copies, {t for t in ns.only.split(",") if t})
+        return
     else:
         # a typo must not silently regenerate the wrong artifact
         raise SystemExit(
             f"unknown subcommand {cmd!r}: expected plans | ledger | queries "
-            f"| drive | parity | profile | maintain"
+            f"| drive | parity | profile | maintain | ab | scale"
         )
     print(f"wrote {out}")
 
